@@ -4,6 +4,8 @@ import graft.analysis.TextAnalyzer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** Checkpointed, resumable index build with per-partition lineage and
   * counters (north rule: a killed spark-submit run resumes without
@@ -31,24 +33,16 @@ object Checkpoint {
 
   private def manifestPath(outDir: String, g: Int) = Paths.get(s"$outDir/manifests/$g.json")
 
+  private implicit val formats: Formats = DefaultFormats
+
   private def writeManifest(outDir: String, m: GroupManifest): Unit = {
     Files.createDirectories(Paths.get(s"$outDir/manifests"))
-    Files.writeString(manifestPath(outDir, m.group),
-      s"""{"group":${m.group},"rows":${m.rows},"tokens":${m.tokens},""" +
-        s""""postings":${m.postings},"checksum":${m.checksum}}""")
+    Files.writeString(manifestPath(outDir, m.group), Serialization.write(m))
   }
 
   def readManifest(outDir: String, g: Int): Option[GroupManifest] = {
     val p = manifestPath(outDir, g)
-    if (!Files.exists(p)) None
-    else {
-      val s = Files.readString(p)
-      def f(k: String): Long = {
-        val m = java.util.regex.Pattern.compile("\"" + k + "\":(-?\\d+)").matcher(s)
-        require(m.find(), s"missing $k"); m.group(1).toLong
-      }
-      Some(GroupManifest(g, f("rows"), f("tokens"), f("postings"), f("checksum")))
-    }
+    if (Files.exists(p)) Some(Serialization.read[GroupManifest](Files.readString(p))) else None
   }
 
   /** Build (or resume building) the flat postings table for
@@ -56,11 +50,6 @@ object Checkpoint {
   def buildPostings(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
                     outDir: String, nGroups: Int): BuildReport = {
     val spark = corpusWithIds.sparkSession
-    val analyzeUdf = udf((s: String) => {
-      val a = analyzer(if (s == null) "" else s)
-      (a.terms, a.positions)
-    })
-    val normUdf = udf((p: Int) => SmallFloat.intToByte4(p))
 
     val built = scala.collection.mutable.ArrayBuffer.empty[Int]
     val skipped = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -72,17 +61,10 @@ object Checkpoint {
           skipped += g; manifests += m
         case None =>
           val part = corpusWithIds.filter(pmod(col("docId"), lit(nGroups)) === g)
-          val analyzed = part.select(
-            col("docId"),
-            analyzeUdf(col("text")).as("a"),
-            col("role"), col("tool"), col("ts"))
-          val tokens = analyzed.select(
-            col("docId"), normUdf(col("a._2")).as("norm"),
-            explode(col("a._1")).as("term"),
-            col("role"), col("tool"), col("ts"))
-          val postings = tokens
-            .groupBy("term", "docId", "norm", "role", "tool", "ts")
-            .agg(count(lit(1)).cast("int").as("tf"))
+          // per-doc tf is counted inside the projection, so the group's
+          // posting rows need no shuffle
+          val postings = IndexBuilder.analyzedPostings(part, analyzer,
+            IndexBuilder.attrCols(part))
 
           // stage to a temp dir, collect lineage counters in the same
           // pass, then atomically publish
@@ -96,8 +78,7 @@ object Checkpoint {
             coalesce(
               pmod(sum(xxhash64(col("term"), col("docId"), col("tf")).cast("decimal(38,0)")),
                 lit(BigDecimal("4611686018427387904"))).cast("long"),
-              lit(0L)).as("checksum"),
-            countDistinct(col("docId")).as("docs")).collect()(0)
+              lit(0L)).as("checksum")).collect()(0)
           val rows = part.count()
           val m = GroupManifest(g, rows, statsRow.getLong(1),
             statsRow.getLong(0), statsRow.getLong(2))
@@ -113,11 +94,8 @@ object Checkpoint {
     }
 
     // global stats + meta "commit"
-    val all = spark.read.parquet(s"$outDir/postings")
-    val s = all.agg(countDistinct(col("docId")), sum(col("tf"))).collect()(0)
-    Files.writeString(Paths.get(s"$outDir/meta.json"),
-      s"""{"analyzer":"${analyzer.name}","docCount":${s.getLong(0)},""" +
-        s""""sumTotalTermFreq":${s.getLong(1)},"nGroups":$nGroups,"version":1}""")
+    val stats = IndexBuilder.corpusStats(spark.read.parquet(s"$outDir/postings"))
+    IndexMeta.write(outDir, IndexMeta(analyzer.name, stats, nGroups = Some(nGroups)))
     BuildReport(built.toSeq, skipped.toSeq, manifests.toSeq)
   }
 

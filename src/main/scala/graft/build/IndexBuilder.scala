@@ -1,8 +1,9 @@
 package graft.build
 
-import graft.analysis.{Analyzers, TextAnalyzer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.analysis.{Analyzed, Analyzers, PosAnalyzed, TextAnalyzer}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Global collection statistics needed by BM25 (reference semantics:
   * Lucene's per-index CollectionStatistics; we use one logical index —
@@ -85,9 +86,9 @@ object IndexBuilder {
     *  - postings are built with NO shuffle at all: every occurrence of a
     *    term within a document sits in the same input row, so per-doc
     *    (term → tf) counting happens inside the analyze projection and
-    *    explode(map) emits finished posting rows — a narrow pipeline that
-    *    scales embarrassingly (Lucene counts per-doc tf in memory the
-    *    same way while inverting a document)
+    *    the exploded groups are finished posting rows — a narrow pipeline
+    *    that scales embarrassingly (Lucene counts per-doc tf in memory
+    *    the same way while inverting a document)
     *  - termStats groupBy(term): the ONE shuffle, over distinct
     *    (term,doc) pairs, partial-aggregated map-side; a hot term arrives
     *    at its reducer as at most numPartitions pre-summed rows — no skew
@@ -96,25 +97,35 @@ object IndexBuilder {
     * assembled on one task, and to the sorted save layout below.
     */
   def build(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
-            withPositions: Boolean = false): Index = {
-    // persist: stats, termStats, save and every query reuse this table —
-    // without it the analyze DAG re-runs per downstream action. (For
-    // at-scale builds use buildAndSave, which streams postings to storage
-    // instead of caching them.)
-    val postings = analyzedPostings(corpusWithIds, analyzer,
-        withPositions = withPositions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            withPositions: Boolean = false): Index =
+    // postings are persisted by fromPostings: stats, termStats, save and
+    // every query reuse them — without it the analyze DAG re-runs per
+    // downstream action. (For at-scale builds use buildAndSave, which
+    // streams postings to storage instead of caching them.)
+    fromPostings(corpusWithIds,
+      analyzedPostings(corpusWithIds, analyzer, attrCols(corpusWithIds),
+        withPositions = withPositions),
+      analyzer.name)
 
-    val termStats = postings
+  /** The Index over finished posting rows — the one place termStats and
+    * CorpusStats are derived for an in-memory bundle (build, the
+    * Maintenance mutations, StreamingIndex.compact). Persists `postings`
+    * and `termStats`; the stats action runs before this returns, so it
+    * has materialized the postings cache (Maintenance relies on that to
+    * drop the predecessor's cache right after). */
+  private[graft] def fromPostings(corpus: DataFrame, postings: DataFrame,
+                                  analyzerName: String): Index = {
+    val cached = postings.persist(StorageLevel.MEMORY_AND_DISK)
+    val termStats = cached
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val stats = computeStats(postings)
-    Index(corpusWithIds, postings, termStats, stats, analyzer.name)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    Index(corpus, cached, termStats, corpusStats(cached), analyzerName)
   }
 
-  private def computeStats(postings: DataFrame): CorpusStats = {
+  /** Global stats of a posting table: docCount = docs with ≥ 1 posting
+    * (Lucene's Terms.getDocCount), sumTotalTermFreq = Σ tf. */
+  private[build] def corpusStats(postings: DataFrame): CorpusStats = {
     val row = postings
       .agg(countDistinct(col("docId")).as("docCount"), sum(col("tf")).as("sttf"))
       .collect()(0)
@@ -122,8 +133,25 @@ object IndexBuilder {
     else CorpusStats(row.getLong(0), row.getLong(1))
   }
 
-  /** Analyzed narrow projection: one finished posting row per (doc, term)
-    * — per-doc tf counted inside the projection, no shuffle.
+  /** Stored-field columns a batch posting row carries — denormalized so
+    * attribute FILTER legs are plain scan predicates — when the corpus
+    * has all of them. */
+  val AttrCols: Seq[String] = Seq("role", "tool", "ts")
+
+  private[graft] def attrCols(corpus: DataFrame): Seq[String] =
+    if (AttrCols.forall(corpus.columns.contains)) AttrCols else Nil
+
+  /** Analyzed narrow projection: one finished posting row
+    * (docId, norm, term, tf[, positions], carry…) per (doc, term) — per-doc
+    * tf counted inside the projection, no shuffle. This is the ONLY code
+    * that turns text into posting rows; its callers are [[build]] and
+    * [[buildAndSave]] (carrying [[attrCols]]), the hot-term sample of
+    * buildAndSave (carrying nothing), `Checkpoint.buildPostings` per
+    * docId group, and `StreamingIndex.postingsFor` per micro-batch
+    * (carrying conv_id/turn_idx for compaction plus the attributes).
+    *
+    * `carry` names the input columns passed through unchanged onto every
+    * posting row of their doc.
     *
     * `keepEmptyDocs = true` emits ONE sentinel row (term = null, tf =
     * null) for a doc whose text analyzes to zero tokens, so the at-scale
@@ -138,87 +166,72 @@ object IndexBuilder {
     * synonym-shared positions come from the analyzer's positional mode. */
   private[graft] def analyzedPostings(corpusWithIds: DataFrame,
                                       analyzer: TextAnalyzer,
+                                      carry: Seq[String] = Nil,
                                       keepEmptyDocs: Boolean = false,
                                       withPositions: Boolean = false): DataFrame = {
-    val hasAttrs = Seq("role", "tool", "ts").forall(corpusWithIds.columns.contains)
-    val attrCols = if (hasAttrs) Seq(col("role"), col("tool"), col("ts")) else Nil
+    val carried = carry.map(col)
     val normUdf = udf((positions: Int) => SmallFloat.intToByte4(positions))
-    // Both branches return the per-doc groups as an ARRAY of (term, …)
-    // tuples (encoded array<struct>) rather than a Scala Map: the array
-    // is built in one pass over the LinkedHashMap entries, where the old
-    // `asScala.toMap` rebuilt an immutable HashMap per document — pure
-    // allocation in the hottest loop of the build (GC pressure is the
-    // measured 32-thread work-inflation tax). `inline`/`inline_outer`
-    // explodes array<struct> exactly as explode/explode_outer did the
-    // map (one row per entry; one null row per empty doc when
-    // keepEmptyDocs), with identical row order and values.
-    if (withPositions) {
-      val analyzeUdf = udf((s: String) => {
-        val a = analyzer.positional(if (s == null) "" else s)
-        val posLists = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-        var i = 0
-        while (i < a.terms.length) {
-          val t = a.terms(i)
-          var buf = posLists.get(t.term)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Int]; posLists.put(t.term, buf) }
-          buf += t.pos
-          i += 1
-        }
-        val arr = new Array[(String, Array[Int])](posLists.size())
-        val it = posLists.entrySet().iterator()
-        var j = 0
-        while (it.hasNext) {
-          val e = it.next()
-          arr(j) = (e.getKey, e.getValue.toArray)
-          j += 1
-        }
-        (arr, a.positions)
-      })
-      val exploded =
-        if (keepEmptyDocs) inline_outer(col("plists")) else inline(col("plists"))
-      corpusWithIds
-        .select(Seq(col("docId"), analyzeUdf(col("text")).as("a")) ++ attrCols: _*)
-        .select(Seq(col("docId"), col("a._1").as("plists"), normUdf(col("a._2")).as("norm")) ++ attrCols: _*)
-        .select((Seq(col("docId"), col("norm")) ++ attrCols :+ exploded): _*)
-        .withColumnRenamed("_1", "term")
-        .withColumnRenamed("_2", "positions")
-        .withColumn("tf", size(col("positions")))
-        .withColumn("tf", when(col("term").isNull, lit(null)).otherwise(col("tf")).cast("int"))
-        .select(Seq(col("docId"), col("norm"), col("term"), col("tf"), col("positions"))
-          ++ attrCols: _*)
-    } else {
-      val analyzeUdf = udf((s: String) => {
-        val a = analyzer(if (s == null) "" else s)
-        val counts = new java.util.LinkedHashMap[String, Integer]()
-        var i = 0
-        while (i < a.terms.length) {
-          // single-probe upsert (merge) instead of getOrDefault + put
-          counts.merge(a.terms(i), Integer.valueOf(1),
-            (x: Integer, y: Integer) => Integer.valueOf(x.intValue() + y.intValue()))
-          i += 1
-        }
-        val arr = new Array[(String, Int)](counts.size())
-        val it = counts.entrySet().iterator()
-        var j = 0
-        while (it.hasNext) {
-          val e = it.next()
-          arr(j) = (e.getKey, e.getValue)
-          j += 1
-        }
-        (arr, a.positions)
-      })
-      val exploded =
-        if (keepEmptyDocs) inline_outer(col("tfs")) else inline(col("tfs"))
-      corpusWithIds
-        .select(Seq(col("docId"), analyzeUdf(col("text")).as("a")) ++ attrCols: _*)
-        .select(Seq(col("docId"), col("a._1").as("tfs"), normUdf(col("a._2")).as("norm")) ++ attrCols: _*)
-        .select((Seq(col("docId"), col("norm")) ++ attrCols :+ exploded): _*)
-        .withColumnRenamed("_1", "term")
-        .withColumnRenamed("_2", "tf")
-        .withColumn("tf", col("tf").cast("int"))
-        .select(Seq(col("docId"), col("norm"), col("term"), col("tf"))
-          ++ attrCols: _*)
+    val analyzeUdf = udf((s: String) => {
+      val text = if (s == null) "" else s
+      if (withPositions) positionGroups(analyzer.positional(text)) else tfGroups(analyzer(text))
+    })
+    // the norm gets its own projection BEFORE the explode: expressions
+    // beside a generator are evaluated once per output row, not per doc.
+    // `inline`/`inline_outer` explodes the array<struct> groups into one
+    // row per entry (one null row per empty doc when keepEmptyDocs).
+    val exploded =
+      if (keepEmptyDocs) inline_outer(col("groups")) else inline(col("groups"))
+    val positions = if (withPositions) Seq(col("_3").as("positions")) else Nil
+    corpusWithIds
+      .select(Seq(col("docId"), analyzeUdf(col("text")).as("a")) ++ carried: _*)
+      .select(Seq(col("docId"), col("a._1").as("groups"), normUdf(col("a._2")).as("norm")) ++ carried: _*)
+      .select((Seq(col("docId"), col("norm")) ++ carried :+ exploded): _*)
+      .select((Seq(col("docId"), col("norm"), col("_1").as("term"), col("_2").as("tf")) ++
+        positions ++ carried): _*)
+  }
+
+  // The per-doc loops of analyzedPostings. Each returns the doc's posting
+  // groups (term, tf, positions) in first-occurrence order, plus its norm
+  // length, as an ARRAY of tuples (encoded array<struct>) rather than a
+  // Scala Map: the array is built in one pass over the LinkedHashMap
+  // entries, where `asScala.toMap` would rebuild an immutable HashMap per
+  // document — pure allocation in the hottest loop of the build (GC
+  // pressure is the measured 32-thread work-inflation tax).
+  private type Groups = (Array[(String, Int, Array[Int])], Int)
+
+  /** Term counts; positions are left null. */
+  private def tfGroups(a: Analyzed): Groups = {
+    val counts = new java.util.LinkedHashMap[String, Integer]()
+    var i = 0
+    while (i < a.terms.length) {
+      // single-probe upsert (merge) instead of getOrDefault + put
+      counts.merge(a.terms(i), Integer.valueOf(1),
+        (x: Integer, y: Integer) => Integer.valueOf(x.intValue() + y.intValue()))
+      i += 1
     }
+    groups(counts, a.positions)((term, tf) => (term, tf.intValue(), null))
+  }
+
+  /** Lucene position lists per term; tf is the list's length. */
+  private def positionGroups(a: PosAnalyzed): Groups = {
+    val posLists = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
+    var i = 0
+    while (i < a.terms.length) {
+      val t = a.terms(i)
+      var buf = posLists.get(t.term)
+      if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Int]; posLists.put(t.term, buf) }
+      buf += t.pos
+      i += 1
+    }
+    groups(posLists, a.positions)((term, ps) => (term, ps.length, ps.toArray))
+  }
+
+  private def groups[V](byTerm: java.util.LinkedHashMap[String, V], norm: Int)(
+      group: (String, V) => (String, Int, Array[Int])): Groups = {
+    val arr = new Array[(String, Int, Array[Int])](byTerm.size())
+    var j = 0
+    byTerm.forEach { (term, v) => arr(j) = group(term, v); j += 1 }
+    (arr, norm)
   }
 
   /** At-scale build: analyze → ONE salted shuffle → sorted parquet write,
@@ -241,12 +254,6 @@ object IndexBuilder {
                    saltBuckets: Int = 16, writeCorpus: Boolean = true,
                    sampleRate: Int = 100, withPositions: Boolean = false): Index = {
     val spark = corpusWithIds.sparkSession
-    // driver-phase wall timestamps (GRAFT_BUILD_PROFILE=1): splits the
-    // build's serial floor into its driver legs for the scaling work
-    val profT0 = System.nanoTime()
-    def prof(tag: String): Unit =
-      if (sys.env.get("GRAFT_BUILD_PROFILE").contains("1"))
-        System.err.println(f"PROFPH ${(System.nanoTime() - profT0) / 1e9}%7.2f $tag")
 
     // heavy-hitter + volume estimate from one deterministic doc sample —
     // ONE job: the posting-row count (volume estimate) rides the same
@@ -260,10 +267,7 @@ object IndexBuilder {
       .groupBy("term").agg(count(lit(1)).as("sdf"))
       .filter(col("sdf") * sampleRate >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
-    prof("hot_terms_collected")
     val estPostings = obsLong(sampleObs, "rows", 0L) * sampleRate
-    val bHot = spark.sparkContext.broadcast(hotTerms)
-    val isHot = udf((t: String) => bHot.value.contains(t))
 
     // Partition the ONE salted shuffle by DATA VOLUME, not core count:
     // with partitions tied to parallelism, per-partition sort volume
@@ -292,18 +296,13 @@ object IndexBuilder {
     // persisted post-write aggregate with two collect jobs — serial
     // floor on every build.
     val buildObs = org.apache.spark.sql.Observation()
-    analyzedPostings(corpusWithIds, analyzer, keepEmptyDocs = true,
-        withPositions = withPositions)
-      .observe(buildObs,
-        sum(col("tf").cast("long")).as("sttf"),
-        count(when(col("term").isNull, lit(1))).as("emptyDocs"))
-      .withColumn("_salt",
-        when(isHot(col("term")), pmod(hash(col("docId")), lit(saltBuckets))).otherwise(lit(0)))
-      .repartition(n, col("term"), col("_salt"))
-      .drop("_salt")
-      .sortWithinPartitions("term", "docId")
-      .write.mode("overwrite").parquet(s"$dir/postings")
-    prof("postings_written")
+    writePostings(
+      analyzedPostings(corpusWithIds, analyzer, attrCols(corpusWithIds),
+          keepEmptyDocs = true, withPositions = withPositions)
+        .observe(buildObs,
+          sum(col("tf").cast("long")).as("sttf"),
+          count(when(col("term").isNull, lit(1))).as("emptyDocs")),
+      hotTerms, n, saltBuckets, s"$dir/postings")
     val sttf = obsLong(buildObs, "sttf", 0L)
     val emptyDocs = obsLong(buildObs, "emptyDocs", 0L)
 
@@ -320,32 +319,21 @@ object IndexBuilder {
       // no extra exchange — the groupBy's own partitioning is kept
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$dir/termstats")
-    prof("termstats_written")
     // docCount needs only the corpus row count (cached by DocIds.assign)
     val docCount = corpusWithIds.count() - emptyDocs
     val stats =
       if (docCount == 0L) CorpusStats(0L, 0L) else CorpusStats(docCount, sttf)
     if (writeCorpus) corpusWithIds.write.mode("overwrite").parquet(s"$dir/corpus")
 
-    val meta =
-      s"""{"analyzer":"${analyzer.name}","docCount":${stats.docCount},""" +
-        s""""sumTotalTermFreq":${stats.sumTotalTermFreq},"segSize":${Segments.DefaultSegSize},""" +
-        s""""hasSegments":false,"version":1}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"), meta)
-
-    prof("done")
+    IndexMeta.write(dir, IndexMeta(analyzer.name, stats,
+      segSize = Some(Segments.DefaultSegSize), hasSegments = Some(false)))
     Index(corpusWithIds, postings, spark.read.parquet(s"$dir/termstats"),
       stats, analyzer.name)
   }
 
   /** Persist the index as a directory of parquet tables + metadata.
-    *
-    * Postings are written hash-distributed on (term, salt) — hot terms
-    * (df above `hotDfThreshold`) are salted across `salt` buckets so no
-    * single write task owns a Zipf head term — and sorted by (term, docId)
-    * within partitions so parquet row-group min/max stats on `term` give
-    * file/row-group pruning for query-term lookups.
-    */
+    * Postings go through the same salted, sorted writer as buildAndSave,
+    * with hot terms (df above `hotDfThreshold`) read off termStats. */
   def save(index: Index, dir: String, numPartitions: Int = 0,
            hotDfThreshold: Long = 1000000L, saltBuckets: Int = 16,
            writeSegments: Boolean = false, segSize: Int = Segments.DefaultSegSize,
@@ -360,27 +348,42 @@ object IndexBuilder {
     index.termStats.sortWithinPartitions("term") // row-group-pruned lookups
       .write.mode("overwrite").parquet(s"$dir/termstats")
 
-    val hotTerms = index.termStats
-      .filter(col("df") >= hotDfThreshold)
-      .select("term").collect().map(_.getString(0)).toSet
-    val bHot = spark.sparkContext.broadcast(hotTerms)
-    val isHot = udf((t: String) => bHot.value.contains(t))
-    index.postings
-      .withColumn("_salt",
-        when(isHot(col("term")), pmod(hash(col("docId")), lit(saltBuckets))).otherwise(lit(0)))
-      .repartition(n, col("term"), col("_salt"))
-      .drop("_salt")
-      .sortWithinPartitions("term", "docId")
-      .write.mode("overwrite").parquet(s"$dir/postings")
+    writePostings(index.postings, hotTerms(index.termStats, hotDfThreshold),
+      n, saltBuckets, s"$dir/postings")
 
     if (writeSegments)
       Segments.save(Segments.pack(index.postings, index.stats, segSize), s"$dir/segments", n)
 
-    val meta =
-      s"""{"analyzer":"${index.analyzerName}","docCount":${index.stats.docCount},""" +
-        s""""sumTotalTermFreq":${index.stats.sumTotalTermFreq},"segSize":$segSize,""" +
-        s""""hasSegments":$writeSegments,"version":1}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"), meta)
+    IndexMeta.write(dir, IndexMeta(index.analyzerName, index.stats,
+      segSize = Some(segSize), hasSegments = Some(writeSegments)))
+  }
+
+  /** The salted, sorted postings write: rows hash-distributed on
+    * (term, salt) — each of `hotTerms` is salted across `saltBuckets`
+    * buckets so no single write task owns a Zipf head term — and sorted
+    * by (term, docId) within partitions so parquet row-group min/max
+    * stats on `term` give file/row-group pruning for query-term lookups. */
+  private def writePostings(postings: DataFrame, hotTerms: Set[String], n: Int,
+                            saltBuckets: Int, path: String): Unit =
+    postings
+      .withColumn("_salt", salt(postings.sparkSession, hotTerms, saltBuckets))
+      .repartition(n, col("term"), col("_salt"))
+      .drop("_salt")
+      .sortWithinPartitions("term", "docId")
+      .write.mode("overwrite").parquet(path)
+
+  /** Terms whose df reaches `hotDfThreshold`. */
+  private[build] def hotTerms(termStats: DataFrame, hotDfThreshold: Long): Set[String] =
+    termStats.filter(col("df") >= hotDfThreshold)
+      .select("term").collect().map(_.getString(0)).toSet
+
+  /** The salt of a posting row: hash(docId) mod `saltBuckets` for a term
+    * in `hotTerms`, 0 otherwise — so a hot term's rows spread over
+    * `saltBuckets` tasks while a cold term's stay on one. */
+  private[build] def salt(spark: SparkSession, hotTerms: Set[String], saltBuckets: Int): Column = {
+    val bHot = spark.sparkContext.broadcast(hotTerms)
+    val isHot = udf((t: String) => bHot.value.contains(t))
+    when(isHot(col("term")), pmod(hash(col("docId")), lit(saltBuckets))).otherwise(lit(0))
   }
 
   /** Load a persisted index. The directory must contain a corpus table
@@ -389,12 +392,7 @@ object IndexBuilder {
   def load(spark: SparkSession, dir: String): Index = {
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
       s"$dir has no corpus table — saved with writeCorpus=false?")
-    val meta = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json"))
-    def field(k: String): String = {
-      val m = java.util.regex.Pattern.compile("\"" + k + "\":\"?([^,}\"]+)").matcher(meta)
-      require(m.find(), s"missing $k in meta.json"); m.group(1)
-    }
-    val hasSegments = meta.contains("\"hasSegments\":true")
+    val meta = IndexMeta.read(dir)
     Index(
       corpus = spark.read.parquet(s"$dir/corpus"),
       // buildAndSave artifacts carry one null-term sentinel row per
@@ -402,10 +400,9 @@ object IndexBuilder {
       // (pushed to the scan, free on sentinel-less save() artifacts)
       postings = spark.read.parquet(s"$dir/postings").filter(col("term").isNotNull),
       termStats = spark.read.parquet(s"$dir/termstats"),
-      stats = CorpusStats(field("docCount").toLong, field("sumTotalTermFreq").toLong),
-      analyzerName = field("analyzer"),
-      segments = if (hasSegments) Some(spark.read.parquet(s"$dir/segments")) else None,
-      segSize = if (meta.contains("\"segSize\"")) field("segSize").toInt
-                else Segments.DefaultSegSize)
+      stats = meta.stats,
+      analyzerName = meta.analyzer,
+      segments = if (meta.hasSegments.contains(true)) Some(spark.read.parquet(s"$dir/segments")) else None,
+      segSize = meta.segSize.getOrElse(Segments.DefaultSegSize))
   }
 }

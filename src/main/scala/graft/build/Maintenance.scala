@@ -28,7 +28,6 @@ object Maintenance {
     val ids = docIds.toDF("docId")
     val corpus = index.corpus.join(broadcast(ids), Seq("docId"), "left_anti")
     val postings = index.postings.join(broadcast(ids), Seq("docId"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rebuild(index, corpus, postings, unpersistOld)
   }
 
@@ -44,16 +43,8 @@ object Maintenance {
     val base = index.corpus.agg(coalesce(max(col("docId")), lit(-1L))).collect()(0).getLong(0)
     val newCorpus = graft.corpus.DocIds.forTurns(turns)
       .withColumn("docId", col("docId") + lit(base + 1))
-    // a positional index's delta must be positional too, or the union fails
-    val delta = IndexBuilder.build(newCorpus, analyzer, index.hasPositions)
-    val corpus = index.corpus.unionByName(newCorpus)
-    val postings = index.postings.unionByName(delta.postings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = rebuild(index, corpus, postings, unpersistOld)
-    // the merged postings cache is materialized by rebuild's stats action;
-    // the delta's own caches are now redundant intermediates
-    delta.unpersistAll(includeCorpus = false)
-    out
+    rebuild(index, index.corpus.unionByName(newCorpus),
+      index.postings.unionByName(deltaPostings(index, newCorpus, analyzer)), unpersistOld)
   }
 
   /** Update = delete + add (reference: Lucene.java:327-330, 1788-1830).
@@ -62,14 +53,15 @@ object Maintenance {
     val ids = updated.select("docId")
     val corpusKept = index.corpus.join(broadcast(ids), Seq("docId"), "left_anti")
     val postingsKept = index.postings.join(broadcast(ids), Seq("docId"), "left_anti")
-    val delta = IndexBuilder.build(updated, analyzer, index.hasPositions)
-    val corpus = corpusKept.unionByName(updated)
-    val postings = postingsKept.unionByName(delta.postings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = rebuild(index, corpus, postings)
-    delta.unpersistAll(includeCorpus = false)
-    out
+    rebuild(index, corpusKept.unionByName(updated),
+      postingsKept.unionByName(deltaPostings(index, updated, analyzer)))
   }
+
+  /** Posting rows for docs added to `index` — positional when the index
+    * is, or the union with its postings fails. */
+  private def deltaPostings(index: Index, docs: DataFrame, analyzer: TextAnalyzer): DataFrame =
+    IndexBuilder.analyzedPostings(docs, analyzer, IndexBuilder.attrCols(docs),
+      withPositions = index.hasPositions)
 
   /** Denormalization refresh (reference: updateByRelation,
     * Lucene.java:1846-1939 — when a parent-entity row changes, rewrite the
@@ -124,14 +116,9 @@ object Maintenance {
     * predecessor (original cache-hygiene semantics). */
   private def rebuild(old: Index, corpus: DataFrame, postings: DataFrame,
                       unpersistOld: Boolean = true): Index = {
-    val termStats = postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // this action materializes the NEW postings cache (the scan below
-    // writes its blocks), so the predecessor's cache can be dropped next
-    val row = postings
-      .agg(countDistinct(col("docId")).as("docCount"), sum(col("tf")).as("sttf"))
-      .collect()(0)
+    // fromPostings' stats action materializes the NEW postings cache, so
+    // the predecessor's cache can be dropped next
+    val index = IndexBuilder.fromPostings(corpus, postings, old.analyzerName)
     // cache hygiene: a mutation SUPERSEDES `old` — without this, a chain
     // of N updates pins N index generations in executor storage. The old
     // bundle stays queryable (its tables recompute from lineage), just
@@ -140,9 +127,6 @@ object Maintenance {
       old.postings.unpersist()
       old.termStats.unpersist()
     }
-    val stats =
-      if (row.isNullAt(0) || row.isNullAt(1)) CorpusStats(0L, 0L)
-      else CorpusStats(row.getLong(0), row.getLong(1))
-    Index(corpus, postings, termStats, stats, old.analyzerName)
+    index
   }
 }

@@ -28,17 +28,11 @@ object SaltedPostings {
     * tfs: array<int>). */
   def build(postings: DataFrame, termStats: DataFrame,
             hotDfThreshold: Long = 100000L, saltBuckets: Int = 16): DataFrame = {
-    val spark = postings.sparkSession
-    val hot = termStats.filter(col("df") >= hotDfThreshold)
-      .select("term").collect().map(_.getString(0)).toSet
-    val bHot = spark.sparkContext.broadcast(hot)
-    val isHot = udf((t: String) => bHot.value.contains(t))
+    val hot = IndexBuilder.hotTerms(termStats, hotDfThreshold)
 
     // phase 1: per-(term, salt) sorted runs, as parallel primitive arrays
     val runs = postings
-      .withColumn("salt",
-        when(isHot(col("term")), pmod(hash(col("docId")), lit(saltBuckets)))
-          .otherwise(lit(0)))
+      .withColumn("salt", IndexBuilder.salt(postings.sparkSession, hot, saltBuckets))
       .groupBy(col("term"), col("salt"))
       .agg(sort_array(collect_list(struct(col("docId"), col("tf")))).as("run"))
       .select(col("term"),

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.analysis.{Analyzers, TextAnalyzer}
-import graft.build.SmallFloat
+import graft.build.IndexBuilder
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -14,10 +14,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch commit IS the visibility boundary, exactly like the reference's
   * IndexWriter.commit cadence.
   *
-  * The per-batch transform is the same narrow (shuffle-free) pipeline as
-  * the batch IndexBuilder, so the streaming path inherits its scale
-  * behavior. Streaming docIds are xxhash64(conv_id, turn_idx) surrogates
-  * over the FULL key pair — no bit-packing, so a conversation of any
+  * The per-batch transform is IndexBuilder.analyzedPostings — the one
+  * narrow (shuffle-free) projection behind build, buildAndSave and
+  * Checkpoint.buildPostings too — so streamed rows equal batch rows and
+  * the streaming path inherits its scale behavior. Streaming docIds are
+  * xxhash64(conv_id, turn_idx) surrogates over the FULL key pair — no bit-packing, so a conversation of any
   * length cannot bleed into another's id space. NOTE the birthday bound:
   * at ~10^10 turns a 64-bit surrogate expects ~n²/2^65 collisions in
   * aggregate (a handful, not "never") — two colliding turns silently
@@ -41,45 +42,9 @@ object StreamingIndex {
     * xxhash64 default. */
   def postingsFor(turns: DataFrame, analyzer: TextAnalyzer,
                   withPositions: Boolean = false,
-                  surrogate: org.apache.spark.sql.Column = defaultSurrogate): DataFrame = {
-    val normUdf = udf((p: Int) => SmallFloat.intToByte4(p))
-    if (withPositions) {
-      val analyzeUdf = udf((s: String) => {
-        val a = analyzer.positional(if (s == null) "" else s)
-        val posLists = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-        a.terms.foreach { t =>
-          var buf = posLists.get(t.term)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Int]; posLists.put(t.term, buf) }
-          buf += t.pos
-        }
-        (scala.jdk.CollectionConverters.MapHasAsScala(posLists).asScala
-          .view.mapValues(_.toSeq).toMap, a.positions)
-      })
-      turns
-        .withColumn("docId", surrogate)
-        .withColumn("a", analyzeUdf(col("text")))
-        .select(col("docId"), col("conv_id"), col("turn_idx"),
-          normUdf(col("a._2")).as("norm"),
-          explode(col("a._1")).as(Seq("term", "positions")),
-          col("role"), col("tool"), col("ts"))
-        .withColumn("tf", size(col("positions")).cast("int"))
-    } else {
-      val analyzeUdf = udf((s: String) => {
-        val a = analyzer(if (s == null) "" else s)
-        val counts = new java.util.LinkedHashMap[String, Int]()
-        a.terms.foreach(t => counts.put(t, counts.getOrDefault(t, 0) + 1))
-        (scala.jdk.CollectionConverters.MapHasAsScala(counts).asScala.toMap, a.positions)
-      })
-      turns
-        .withColumn("docId", surrogate)
-        .withColumn("a", analyzeUdf(col("text")))
-        .select(col("docId"), col("conv_id"), col("turn_idx"),
-          normUdf(col("a._2")).as("norm"),
-          explode(col("a._1")).as(Seq("term", "tf")),
-          col("role"), col("tool"), col("ts"))
-        .withColumn("tf", col("tf").cast("int"))
-    }
-  }
+                  surrogate: org.apache.spark.sql.Column = defaultSurrogate): DataFrame =
+    IndexBuilder.analyzedPostings(turns.withColumn("docId", surrogate), analyzer,
+      Seq("conv_id", "turn_idx") ++ IndexBuilder.AttrCols, withPositions = withPositions)
 
   /** Batch compaction of a streamed postings table: re-mints DENSE docIds
     * (the batch builder's stable (conv_id, turn_idx) ordering) from the
@@ -96,7 +61,6 @@ object StreamingIndex {
     */
   def compact(streamed: DataFrame, turns: org.apache.spark.sql.Dataset[graft.model.Turn],
               analyzer: TextAnalyzer = Analyzers.Icat): graft.build.Index = {
-    val spark = streamed.sparkSession
     // surrogate-collision check: a surrogate docId must map to exactly ONE
     // natural key pair
     val collided = streamed.select("docId", "conv_id", "turn_idx").distinct()
@@ -116,18 +80,8 @@ object StreamingIndex {
     val postings = streamed
       .join(mapping, Seq("conv_id", "turn_idx"))
       .select(Seq(col("__denseId").as("docId"), col("norm"), col("term"),
-        col("tf")) ++ posCols ++ Seq(col("role"), col("tool"), col("ts")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val termStats = postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val row = postings
-      .agg(countDistinct(col("docId")).as("docCount"), sum(col("tf")).as("sttf"))
-      .collect()(0)
-    val stats =
-      if (row.isNullAt(0) || row.isNullAt(1)) graft.build.CorpusStats(0L, 0L)
-      else graft.build.CorpusStats(row.getLong(0), row.getLong(1))
-    graft.build.Index(corpus, postings, termStats, stats, analyzer.name)
+        col("tf")) ++ posCols ++ IndexBuilder.AttrCols.map(col): _*)
+    IndexBuilder.fromPostings(corpus, postings, analyzer.name)
   }
 
   private val turnSchema = org.apache.spark.sql.types.StructType(Seq(

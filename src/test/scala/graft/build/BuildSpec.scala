@@ -3,6 +3,11 @@ package graft.build
 import graft.SparkSuite
 import graft.analysis.Analyzers
 import graft.corpus.{DocIds, TranscriptGen}
+import graft.streaming.StreamingIndex
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Salted-build equivalence and checkpoint/resume (FIXTURES.md §4-5). */
@@ -138,5 +143,123 @@ class BuildSpec extends SparkSuite {
       .select("term", "docId", "tf", "norm")
       .orderBy("term", "docId").collect().map(_.toString).toSeq
     assert(a === b)
+  }
+
+  private def tmpDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** The Exchange nodes of a frame's physical plan, adaptive stages
+    * included. */
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def exchanges(df: DataFrame): Seq[Exchange] =
+      collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+  }
+
+  test("the postings projections plan no Exchange") {
+    val dir = tmpDir("graft-plan")
+    corpus.write.parquet(s"$dir/corpus")
+    TranscriptGen.tiny(spark).toDF().write.parquet(s"$dir/turns")
+    val onDisk = spark.read.parquet(s"$dir/corpus")
+    val turns = spark.read.parquet(s"$dir/turns")
+    for (withPositions <- Seq(false, true)) {
+      val batch = IndexBuilder.analyzedPostings(onDisk, Analyzers.Icat,
+        IndexBuilder.attrCols(onDisk), withPositions = withPositions)
+      val streamed = StreamingIndex.postingsFor(turns, Analyzers.Icat, withPositions)
+      assert(Plans.exchanges(batch).isEmpty, batch.queryExecution.executedPlan)
+      assert(Plans.exchanges(streamed).isEmpty, streamed.queryExecution.executedPlan)
+      assert(batch.count() > 0 && streamed.count() === batch.count())
+    }
+    // the guard sees a shuffle when there is one
+    val regrouped = IndexBuilder.analyzedPostings(onDisk, Analyzers.Icat)
+      .groupBy("term", "docId").count()
+    assert(Plans.exchanges(regrouped).nonEmpty)
+  }
+
+  test("every build entry point gives the same rows and docCount on hostile text") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(1767225600000L)
+    val texts = Seq(
+      "merge conflict in the build",
+      null,                              // null text
+      "",                                // empty
+      "the and that this",               // all stopwords
+      "!!! ??? ... --- ;;",              // punctuation only
+      "café naïve résumé Straße",        // accented Latin
+      "日本語のテキスト 検索エンジン",         // CJK
+      "merge again: café, 検索 build build")
+    val turns = texts.zipWithIndex.map { case (t, i) =>
+      graft.model.Turn(s"conv-${i % 3}", i, if (i % 2 == 0) "user" else "assistant", t,
+        if (i % 3 == 0) Some("bash") else None, new java.sql.Timestamp(ts.getTime + i * 60000L))
+    }.toDS()
+    val hostile = DocIds.forTurns(turns).cache()
+    val withTokens = texts.count(t => Analyzers.Icat(if (t == null) "" else t).terms.nonEmpty)
+    // null, empty, all-stopword and punctuation-only turns analyze to no
+    // token; the accented and CJK turns do
+    assert(withTokens === texts.length - 4)
+
+    def rows(df: DataFrame, withPositions: Boolean): Seq[Seq[Any]] = {
+      val cols = Seq("term", "docId", "tf", "norm") ++
+        (if (withPositions) Seq("positions") else Nil)
+      df.select(cols.map(col): _*).orderBy("term", "docId").collect().map(_.toSeq).toSeq
+    }
+
+    for (withPositions <- Seq(false, true)) {
+      val built = IndexBuilder.build(hostile, Analyzers.Icat, withPositions)
+      val want = rows(built.postings, withPositions)
+      assert(want.nonEmpty)
+      assert(built.stats.docCount === withTokens.toLong)
+
+      val dir = tmpDir("graft-hostile")
+      val saved = IndexBuilder.buildAndSave(hostile, Analyzers.Icat, dir,
+        hotDfThreshold = 1L, sampleRate = 1, withPositions = withPositions)
+      assert(rows(saved.postings, withPositions) === want)
+      assert(saved.stats === built.stats)
+      val loaded = IndexBuilder.load(spark, dir)
+      assert(rows(loaded.postings, withPositions) === want)
+      assert(loaded.stats === built.stats)
+
+      val streamed = StreamingIndex.postingsFor(turns.toDF(), Analyzers.Icat, withPositions)
+      val compacted = StreamingIndex.compact(streamed, turns, Analyzers.Icat)
+      assert(rows(compacted.postings, withPositions) === want)
+      assert(compacted.stats === built.stats)
+
+      if (!withPositions) { // the checkpointed build writes no positions
+        val ckDir = tmpDir("graft-hostile-ckpt")
+        Checkpoint.buildPostings(hostile, Analyzers.Icat, ckDir, 3)
+        assert(rows(Checkpoint.loadPostings(spark, ckDir), withPositions) === want)
+        assert(IndexMeta.read(ckDir).stats === built.stats)
+        // group manifests keep the key layout resumed builds read back
+        assert(Files.readString(Paths.get(ckDir, "manifests", "0.json")).matches(
+          """\{"group":0,"rows":\d+,"tokens":\d+,"postings":\d+,"checksum":-?\d+\}"""))
+      }
+      built.unpersistAll(includeCorpus = false)
+      compacted.unpersistAll()
+    }
+    hostile.unpersist()
+  }
+
+  test("meta.json keeps its keys; a truncated or incomplete one is an IllegalArgumentException") {
+    val dir = tmpDir("graft-meta")
+    val saved = IndexBuilder.buildAndSave(corpus, Analyzers.Icat, dir, hotDfThreshold = 50L)
+    val meta = Paths.get(dir, "meta.json")
+    val good = Files.readString(meta)
+    assert(good === s"""{"analyzer":"icat","docCount":${saved.stats.docCount},""" +
+      s""""sumTotalTermFreq":${saved.stats.sumTotalTermFreq},"segSize":${Segments.DefaultSegSize},""" +
+      """"hasSegments":false,"version":1}""")
+    // a directory whose meta predates segSize still loads
+    Files.writeString(meta, good.replace(s""""segSize":${Segments.DefaultSegSize},""", ""))
+    assert(IndexBuilder.load(spark, dir).segSize === Segments.DefaultSegSize)
+
+    Files.writeString(meta, good.take(good.length / 2))
+    val truncated = intercept[IllegalArgumentException](IndexBuilder.load(spark, dir))
+    assert(truncated.getMessage.contains(dir) && truncated.getMessage.contains("meta.json"))
+
+    Files.writeString(meta, good.replaceFirst("\"docCount\":\\d+,", ""))
+    val noKey = intercept[IllegalArgumentException](IndexBuilder.load(spark, dir))
+    assert(noKey.getMessage.contains(dir) && noKey.getMessage.contains("docCount"))
+
+    Files.delete(meta)
+    val missing = intercept[IllegalArgumentException](IndexBuilder.load(spark, dir))
+    assert(missing.getMessage.contains(dir))
   }
 }
